@@ -12,7 +12,8 @@ driver's CORRECTNESS schema ({rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err} per query) so a judge can union
 driver + builder coverage mechanically instead of re-running queries.
 Oracle-less (rows-only) entries carry "oracle_rows": null and
-"hash_match": null.
+"hash_match": null; so does any entry whose hash was never compared (an
+error, or a schema mismatch).
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def main() -> None:
         rec = {
             "rows_match": False,
             "schema_match": False,
-            "hash_match": False,
+            "hash_match": None,  # set only when the hashes are compared
             "spark_rows": None,
             "oracle_rows": None,
             "err": None,

@@ -93,6 +93,17 @@ def test_synthetic_template_matches_oracle(spark):
     assert_matches_oracle(games, oracle)
 
 
+
+def test_mod_lookup_is_a_local_relation(spark):
+    from wolf_quake_spark.data_model import MOD_LOOKUP_ROWS, mod_lookup_df
+
+    lookup = mod_lookup_df(spark)
+    assert [tuple(r) for r in lookup.collect()] == MOD_LOOKUP_ROWS
+    assert [f.nullable for f in lookup.schema] == [False, False]
+    # broadcasting a local relation runs no Spark job
+    assert lookup._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_soup_matches_oracle(spark, seed):
     """Seeded random event soup — sessionization edge cases (conditional

@@ -261,3 +261,14 @@ def test_dv_rewrite_crash_windows_never_wedge(spark, tmp_path):
     # pure no-op rewrite: nothing pending, version unchanged
     info3 = rewrite_position_deletes(spark, table)
     assert info3 == {"dv_version": 2, "folded_files": 0}
+
+
+def test_recover_skips_an_unexpected_seq_dir(spark, tmp_path):
+    import os
+
+    from wolf_quake_spark.plans.deletes import _recover
+
+    table = _mk_table(spark, tmp_path, n=10, parts=1)
+    os.makedirs(f"{table}/pos_deletes/seq=junk")
+    _recover(table)  # a non-numeric seq= name must not wedge recovery
+    assert os.path.isdir(f"{table}/pos_deletes/seq=junk")

@@ -6,11 +6,15 @@ import glob
 import json
 import os
 import shutil
+import time
+from collections import Counter
 
 import pytest
 
+from tests.oracle import sink_rows
+from tests.util import mod_label
 from wolf_quake_spark.cli import main as cli_main
-from wolf_quake_spark.datagen import synth_transcripts
+from wolf_quake_spark.datagen import synth_game_log, synth_transcripts, transcripts_from_log
 from wolf_quake_spark.operators import assign_games, extract_events
 from wolf_quake_spark.operators.route import route
 from wolf_quake_spark.plans.checkpoint import Manifest
@@ -20,6 +24,16 @@ from wolf_quake_spark.plans.pipeline import (
     run_resumable,
 )
 from wolf_quake_spark.sources.catalog import SinkCatalog
+
+ALL_SINKS = (
+    "kills",
+    "game_boundaries",
+    "player_state",
+    "rejects",
+    "game_totals",
+    "mod_histogram",
+    "player_ranking",
+)
 
 
 @pytest.fixture(scope="module")
@@ -85,15 +99,95 @@ def test_resume_is_noop_when_complete(spark, small_input, tmp_path):
 
 
 def test_strict_mode_raises_on_rejects(spark, tmp_path):
-    from wolf_quake_spark.datagen import transcripts_from_log
-
     tr = transcripts_from_log(spark, " 0:01 Kill: x 3 7:\n 0:02 ShutdownGame:", "c0")
-    cat = SinkCatalog(spark, str(tmp_path / "strict_out"))
+    out = tmp_path / "strict_out"
+    cat = SinkCatalog(spark, str(out))
     with pytest.raises(PipelineRejectError):
         run_batch(tr, cat, "b0", strict=True)
+    # the strict check runs only after every sink has landed
+    for sink in ALL_SINKS:
+        assert (out / sink / "batch=b0").is_dir(), sink
     # lenient: same input runs clean and routes the reject
     res = run_batch(tr, cat, "b1", strict=False)
     assert res.counts["rejects"] == 1
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_failed_sink_raises_after_every_other_write(spark, small_input, tmp_path, monkeypatch):
+    orig = SinkCatalog.write_batch_counted
+    landed = []
+
+    def write(cat, df, sink, batch_id):
+        if sink == "kills":
+            raise RuntimeError("kills sink unavailable")
+        time.sleep(0.5)  # an early re-raise would return before these land
+        n = orig(cat, df, sink, batch_id)
+        landed.append(sink)
+        return n
+
+    monkeypatch.setattr(SinkCatalog, "write_batch_counted", write)
+    before = _persisted_rdds(spark)
+    cat = SinkCatalog(spark, str(tmp_path / "out"))
+    with pytest.raises(RuntimeError, match="kills sink unavailable"):
+        run_batch(spark.read.parquet(small_input), cat, "b0")
+    assert sorted(landed) == sorted(s for s in ALL_SINKS if s != "kills")
+    # the batch's persisted frame is released on the failure path too
+    assert _persisted_rdds(spark) == before
+
+
+def test_sink_jobs_inherit_the_callers_job_group(spark, small_input, tmp_path):
+    sc = spark.sparkContext
+    group = "run-batch-fanout"
+    sc.setJobGroup(group, "sink threads inherit the job group")
+    try:
+        run_batch(spark.read.parquet(small_input), SinkCatalog(spark, str(tmp_path)), "b0")
+    finally:
+        sc._jsc.clearJobGroup()
+    # the materializing action plus at least one write job per sink
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= len(ALL_SINKS) + 1
+
+
+def test_fanout_sinks_match_the_oracle(spark, tmp_path):
+    """Every sink's rows, read back, equal the sequential oracle's."""
+    lines = synth_game_log(seed=11, n_games=6)
+    # malformed gated lines and orphan references, inside the first game
+    first_kill = next(i for i, ln in enumerate(lines) if " Kill: " in ln)
+    lines[first_kill:first_kill] = [
+        " 1:00 Kill: 2 x 7: bad killer",
+        " 1:01 Kill: 3",
+        " 1:02",
+        " 1:03 ClientUserinfoChanged: 77 n\\ghost\\t\\0",
+        " 1:04 Kill: 88 2 7: never connected",
+    ]
+    tr = transcripts_from_log(spark, "\n".join(lines), "c0")
+    cat = SinkCatalog(spark, str(tmp_path / "out"))
+    res = run_batch(tr, cat, "b0", verify=True)
+    expect = sink_rows(lines)
+    # the histogram sink is keyed by label: out-of-range mod ids merge
+    hist = Counter()
+    for g, mod, n in expect["mod_histogram"]:
+        hist[(g, mod_label(mod))] += n
+    expect["mod_histogram"] = sorted((g, label, n) for (g, label), n in hist.items())
+    columns = {
+        "kills": ["turn_idx", "killer_id", "victim_id", "mod_id", "game_id"],
+        "game_boundaries": ["turn_idx", "kind", "is_flush", "game_id"],
+        "player_state": ["turn_idx", "kind", "client_id", "name", "game_id"],
+        "rejects": ["turn_idx", "reason"],
+        "game_totals": ["game_id", "total_kills"],
+        "mod_histogram": ["game_id", "mod_name", "kills"],
+        "player_ranking": ["game_id", "client_id", "name", "score", "rank"],
+    }
+    assert list(res.counts) == list(columns) == list(ALL_SINKS)
+    for sink, cols in columns.items():
+        got = sorted(
+            (tuple(r) for r in cat.read_batch(sink, "b0").select(*cols).collect()),
+            key=lambda r: r[:2],
+        )
+        assert got == expect[sink], sink
+        assert res.counts[sink] == len(got) > 0, sink
 
 
 def test_cli_generate_run_report(spark, tmp_path, capsys):

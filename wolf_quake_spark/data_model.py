@@ -118,13 +118,6 @@ MOD_LOOKUP_ROWS: list[tuple[int, str]] = [
 
 UNKNOWN_MOD = "Unknown"
 
-MOD_LOOKUP_SCHEMA = T.StructType(
-    [
-        T.StructField("mod_id", T.LongType(), False),
-        T.StructField("mod_name", T.StringType(), False),
-    ]
-)
-
 # Tool-tag enrichment dimension for the transcript ``tool`` column (pipeline
 # side; no reference analog — the north_star asks for an analogous broadcast
 # lookup for tool tags).
@@ -143,8 +136,14 @@ UNKNOWN_TOOL_CATEGORY = "other"
 
 
 def mod_lookup_df(spark):
-    """The 29-row broadcastable dimension table."""
-    return spark.createDataFrame(MOD_LOOKUP_ROWS, MOD_LOOKUP_SCHEMA)
+    """The 29-row broadcastable dimension table.
+
+    An inline ``VALUES`` table is a local relation: broadcasting it needs no
+    Spark job.  ``createDataFrame`` on a Python list would instead
+    parallelize pickled rows, so every enrich_mod broadcast ran a job of
+    Python worker tasks just to rebuild these 29 rows."""
+    rows = ", ".join(f"({mod_id}L, '{name}')" for mod_id, name in MOD_LOOKUP_ROWS)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS mod_lookup(mod_id, mod_name)")
 
 
 def tool_lookup_df(spark):

@@ -11,9 +11,15 @@ Every gated line routes to exactly one sink family:
 
 Sink schemas follow FIXTURES.md §5.  The input is the sessionized frame, so
 every routed row carries its ``game_id`` lineage (NULL = discarded EOF tail).
+
+``ROUTES`` maps each sink to its own builder, so a caller can construct and
+land every sink independently (plans/pipeline.py builds each one on its own
+thread); ``route`` builds all four.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,24 +35,24 @@ from wolf_quake_spark.data_model import (
 from wolf_quake_spark.operators.enrich import enrich_mod
 from wolf_quake_spark.operators.validate import orphan_references
 
-SINKS = ("kills", "game_boundaries", "player_state", "rejects")
+BASE = ("conv_id", "turn_idx", "line_no")
 
 
-def route(sessionized: DataFrame, with_orphans: bool = True) -> dict[str, DataFrame]:
-    base = ["conv_id", "turn_idx", "line_no"]
-
-    kills = enrich_mod(
+def kills_sink(sessionized: DataFrame) -> DataFrame:
+    return enrich_mod(
         sessionized.filter(F.col("event_type") == EV_KILL).select(
-            *base, "killer_id", "victim_id", "mod_id", "game_id", F.col("raw").alias("text")
+            *BASE, "killer_id", "victim_id", "mod_id", "game_id", F.col("raw").alias("text")
         )
     ).select(
-        *base, "killer_id", "victim_id", "mod_id", "mod_name", "game_id", "text"
+        *BASE, "killer_id", "victim_id", "mod_id", "mod_name", "game_id", "text"
     )
 
-    boundaries = sessionized.filter(
+
+def boundaries_sink(sessionized: DataFrame) -> DataFrame:
+    return sessionized.filter(
         F.col("event_type").isin(EV_INIT, EV_SHUTDOWN)
     ).select(
-        *base,
+        *BASE,
         F.when(F.col("event_type") == EV_INIT, F.lit("init"))
         .otherwise(F.lit(EV_SHUTDOWN))
         .alias("kind"),
@@ -54,10 +60,12 @@ def route(sessionized: DataFrame, with_orphans: bool = True) -> dict[str, DataFr
         "game_id",
     )
 
-    player_state = sessionized.filter(
+
+def player_state_sink(sessionized: DataFrame) -> DataFrame:
+    return sessionized.filter(
         F.col("event_type").isin(EV_CONNECT, EV_USERINFO)
     ).select(
-        *base,
+        *BASE,
         F.when(F.col("event_type") == EV_CONNECT, F.lit("connect"))
         .otherwise(F.lit("userinfo"))
         .alias("kind"),
@@ -66,15 +74,25 @@ def route(sessionized: DataFrame, with_orphans: bool = True) -> dict[str, DataFr
         "game_id",
     )
 
+
+def rejects_sink(sessionized: DataFrame, with_orphans: bool = True) -> DataFrame:
     rejects = sessionized.filter(F.col("event_type") == EV_REJECT).select(
-        *base, "reason", "raw"
+        *BASE, "reason", "raw"
     )
     if with_orphans:
         rejects = rejects.unionByName(orphan_references(sessionized))
+    return rejects
 
-    return {
-        "kills": kills,
-        "game_boundaries": boundaries,
-        "player_state": player_state,
-        "rejects": rejects,
-    }
+
+ROUTES: dict[str, Callable[[DataFrame], DataFrame]] = {
+    "kills": kills_sink,
+    "game_boundaries": boundaries_sink,
+    "player_state": player_state_sink,
+    "rejects": rejects_sink,
+}
+
+
+def route(sessionized: DataFrame, with_orphans: bool = True) -> dict[str, DataFrame]:
+    out = {name: build(sessionized) for name, build in ROUTES.items() if name != "rejects"}
+    out["rejects"] = rejects_sink(sessionized, with_orphans)
+    return out

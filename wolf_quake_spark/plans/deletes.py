@@ -415,7 +415,9 @@ def _recover(table_dir: str) -> None:
         if os.path.isdir(pos_dir):
             last = _load(table_dir)["last_seq"]
             for d in os.listdir(pos_dir):
-                if d.startswith("seq=") and int(d[4:]) > last:
+                # a seq= name this module never writes is left alone
+                # rather than wedging every recovery on its parse
+                if d.startswith("seq=") and d[4:].isdigit() and int(d[4:]) > last:
                     shutil.rmtree(os.path.join(pos_dir, d))
 
     if not os.path.exists(jpath):

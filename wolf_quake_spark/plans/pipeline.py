@@ -5,17 +5,19 @@
 checkpoint manifest (plans/checkpoint.py).
 
 Strict vs lenient (reference aborts on first malformed gated line,
-src/main.rs:33-39): ``strict=True`` raises ``PipelineRejectError`` after the
-rejects sink lands if any reject rows exist; lenient keeps going.
+src/main.rs:33-39): ``strict=True`` raises ``PipelineRejectError`` after
+every sink lands if any reject rows exist; lenient keeps going.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from wolf_quake_spark.operators.aggregates import (
     game_totals,
@@ -23,12 +25,16 @@ from wolf_quake_spark.operators.aggregates import (
     player_ranking,
 )
 from wolf_quake_spark.operators.extract import EXTRACTORS
-from wolf_quake_spark.operators.route import route
+from wolf_quake_spark.operators.route import ROUTES
 from wolf_quake_spark.operators.sessionize import assign_games
 from wolf_quake_spark.plans.checkpoint import Manifest, BatchRecord, plan_batches
 from wolf_quake_spark.sources.catalog import SinkCatalog
 
-AGG_SINKS = ("game_totals", "mod_histogram", "player_ranking")
+AGGREGATES = {
+    "game_totals": game_totals,
+    "mod_histogram": mod_histogram,
+    "player_ranking": player_ranking,
+}
 
 
 class PipelineRejectError(RuntimeError):
@@ -56,6 +62,17 @@ def run_batch(
     back and asserts the on-disk count matches (a full second pass over the
     output — integrity check, off by default).
 
+    The sinks land as concurrent Spark jobs over one materialized frame: the
+    sessionized frame is persisted and built by a single action, then every
+    sink (four routes + three aggregates) is planned, written and verified
+    on its own thread.  Each sink is a short job of a few tasks, so landing
+    them one at a time leaves the cores idle through every job's tail and
+    every gap of query planning between jobs; run together, the
+    scheduler packs their tasks onto the cores and the planning overlaps.
+    Threads inherit the caller's job group and local properties.  The
+    first failed sink's error is raised once every write has finished;
+    the strict check and the unpersist also wait for every write.
+
     ``skew_chunk_turns`` switches sessionization to the salted segmented
     scan (operators/sessionize.py::assign_games_salted) so a
     mega-conversation spreads over ``n_turns / skew_chunk_turns`` tasks
@@ -75,23 +92,39 @@ def run_batch(
         sess = assign_games(extract(transcripts))
     sess = sess.persist(StorageLevel.DISK_ONLY)
     try:
-        counts: dict[str, int] = {}
-        to_write = dict(route(sess))
+        # build the cache once; without this action the concurrent sink jobs
+        # would each recompute the uncached frame while racing to cache it
+        sess.count()
+        builders = dict(ROUTES)
         if with_aggregates:
-            to_write.update(
-                game_totals=game_totals(sess),
-                mod_histogram=mod_histogram(sess),
-                player_ranking=player_ranking(sess),
-            )
-        for name, df in to_write.items():
-            counts[name] = catalog.write_batch_counted(df, name, batch_id)
+            builders.update(AGGREGATES)
+
+        def land(name: str, build) -> int:
+            n = catalog.write_batch_counted(build(sess), name, batch_id)
             if verify:
                 on_disk = catalog.read_batch(name, batch_id).count()
-                if on_disk != counts[name]:
+                if on_disk != n:
                     raise RuntimeError(
-                        f"sink {name} batch {batch_id}: wrote {counts[name]} "
+                        f"sink {name} batch {batch_id}: wrote {n} "
                         f"rows but read back {on_disk}"
                     )
+            return n
+
+        spark = sess.sparkSession
+        # one wrapper per thread: each copies the caller's local properties,
+        # and the copies must not be shared (every SQL execution writes its
+        # id into its thread's properties)
+        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+            futures = {
+                name: pool.submit(inheritable_thread_target(spark)(land), name, build)
+                for name, build in builders.items()
+            }
+        errors = [(n, f.exception()) for n, f in futures.items() if f.exception()]
+        if errors:
+            for name, err in errors[1:]:
+                errors[0][1].add_note(f"sink {name} failed too: {err!r}")
+            raise errors[0][1]
+        counts = {name: f.result() for name, f in futures.items()}
         if strict and counts.get("rejects", 0) > 0:
             raise PipelineRejectError(
                 f"strict mode: {counts['rejects']} reject rows in batch {batch_id}"
